@@ -1,11 +1,12 @@
 package graft.cli
 
 import graft.gen.SyntheticRepoFiles
+import graft.graph.{GraphOps, StopMarker}
 import graft.mine.MineJob
 import graft.model._
 import graft.resolve.ResolveJob
 import graft.util.Fs
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -144,6 +145,23 @@ object Cli {
 
   def run(spark: SparkSession, cmd: String, dir: String, rest: Array[String]): Unit = {
     import spark.implicits._
+
+    // Input of a resumable kernel command: the store's linkage graph,
+    // indexed, plus its checkpoint directory. The directory is keyed by a
+    // fingerprint of the edge table (and the iteration target, via
+    // `suffix`), so a changed graph (after `update`) or a different target
+    // never resumes from a stale snapshot — it starts fresh. A killed run of
+    // the SAME (graph, target) continues mid-convergence with the same
+    // command; a stopped one (see `stop`) resumes the same way.
+    def kernelInput(kernel: String, suffix: String = ""): (DataFrame, DataFrame, String) = {
+      val (et, sc, dc) = graphTable(spark, dir)
+      val g = spark.read.parquet(s"$dir/$et")
+      val fp = g.select(xxhash64(col(sc), col(dc)).as("h"))
+        .agg(expr("coalesce(bit_xor(h), 0L)")).first().getLong(0) // order-independent; 0 for an empty graph
+      val ckptDir = f"$dir/checkpoints/$kernel-$fp%016x$suffix"
+      val (e, dict) = GraphOps.indexEdges(spark, g, sc, dc)
+      (e, dict, ckptDir)
+    }
     cmd match {
       case "start" =>
         val t0 = System.nanoTime()
@@ -198,38 +216,15 @@ object Cli {
         println(s"parse: $oldDeps AP -> $newDeps AA edges")
 
       case "pagerank" =>
-        // Resumable kernel run: checkpoints land in a directory keyed by a
-        // fingerprint of (edge table, iteration target), so a changed graph
-        // (after `update`) or a different iteration count never resumes from
-        // a stale snapshot — it starts fresh. A killed run of the SAME
-        // (graph, iters) continues mid-convergence with the same command.
-        // Stale-marker handling is by WATERMARK, not deletion: markers from
-        // before this invocation are ignored, so a `stop` racing a fresh
-        // launch is never swallowed and concurrent runs on the same store
-        // can't cancel each other's stop requests. Captured at COMMAND ENTRY
-        // (before the fingerprint/indexing jobs): a stop issued during that
-        // setup window must count as "after launch", not stale.
-        val invokedAtMs = System.currentTimeMillis()
-        // seq seen at entry: a marker already present now (whatever its
-        // clocks say) must NOT stop this run; only a HIGHER seq written
-        // later is honored — clock-free (GraphOps.fsModifiedSince channel 1)
-        val seqSeen = graft.graph.GraphOps.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L)
+        val stop = StopMarker.atEntry(spark, s"$dir/STOP")
         val iters = rest.headOption.map(_.toInt).getOrElse(20)
-        val (edgeTable, srcCol, dstCol) = graphTable(spark, dir)
-        val pp = spark.read.parquet(s"$dir/$edgeTable")
-        val fp = pp.select(xxhash64(col(srcCol), col(dstCol)).as("h"))
-          .agg(expr("coalesce(bit_xor(h), 0L)")).first().getLong(0) // order-independent; 0 for an empty graph
-        val ckptDir = f"$dir/checkpoints/pr-$fp%016x-i$iters"
-        val (e, dict) = graft.graph.GraphOps.indexEdges(spark, pp, srcCol, dstCol)
-        val latest = graft.graph.GraphOps.latestCheckpoint(spark, ckptDir)
-        val stopFlag = s"$dir/STOP"
+        val (e, dict, ckptDir) = kernelInput("pr", s"-i$iters")
+        val latest = GraphOps.latestCheckpoint(spark, ckptDir)
         val result = latest match {
           case Some(step) if step <= iters =>
-            graft.graph.GraphOps.resumePageRank(spark, e, iters, ckptDir,
-              stopFlag = Some(stopFlag), stopAfterMs = invokedAtMs, stopSeqSeen = seqSeen)
+            GraphOps.resumePageRank(spark, e, iters, ckptDir, stop = Some(stop))
           case _ =>
-            graft.graph.GraphOps.pageRank(spark, e, iters, checkpointDir = Some(ckptDir),
-              stopFlag = Some(stopFlag), stopAfterMs = invokedAtMs, stopSeqSeen = seqSeen)
+            GraphOps.pageRank(spark, e, iters, checkpointDir = Some(ckptDir), stop = Some(stop))
         }
         val hasCkpt = latest.isDefined
         result.ranks.join(dict, Seq("id"))
@@ -240,27 +235,12 @@ object Cli {
         println(s"pagerank: ${result.supersteps} supersteps (resumed=$hasCkpt, stopped=$stopped)")
 
       case "components" =>
-        // Resumable connected components over the store's linkage graph,
-        // same checkpoint-fingerprint discipline as `pagerank`: a changed
-        // graph starts fresh; a killed run of the same graph continues from
-        // the latest contracted edge snapshot.
-        // same cooperative-stop wiring as `pagerank`: watermark captured at
-        // COMMAND ENTRY so a stop issued during the fingerprint/indexing
-        // setup jobs is "after launch", never stale
-        val ccStop = Some(s"$dir/STOP"); val ccInvokedAt = System.currentTimeMillis()
-        val ccSeqSeen = graft.graph.GraphOps.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L)
-        val (et, sc, dc) = graphTable(spark, dir)
-        val g = spark.read.parquet(s"$dir/$et")
-        val fp = g.select(xxhash64(col(sc), col(dc)).as("h"))
-          .agg(expr("coalesce(bit_xor(h), 0L)")).first().getLong(0)
-        val ckptDir = f"$dir/checkpoints/cc-$fp%016x"
-        val (e, dict) = graft.graph.GraphOps.indexEdges(spark, g, sc, dc)
-        val result = graft.graph.GraphOps.latestCheckpoint(spark, ckptDir, "cc") match {
-          case Some(_) => graft.graph.GraphOps.resumeConnectedComponents(spark, e, ckptDir,
-            stopFlag = ccStop, stopAfterMs = ccInvokedAt, stopSeqSeen = ccSeqSeen)
-          case None => graft.graph.GraphOps.connectedComponentsResult(spark, e,
-            checkpointDir = Some(ckptDir), stopFlag = ccStop, stopAfterMs = ccInvokedAt,
-            stopSeqSeen = ccSeqSeen)
+        val stop = StopMarker.atEntry(spark, s"$dir/STOP")
+        val (e, dict, ckptDir) = kernelInput("cc")
+        val result = GraphOps.latestCheckpoint(spark, ckptDir, "cc") match {
+          case Some(_) => GraphOps.resumeConnectedComponents(spark, e, ckptDir, stop = Some(stop))
+          case None => GraphOps.connectedComponentsResult(spark, e,
+            checkpointDir = Some(ckptDir), stop = Some(stop))
         }
         // a STOPPED run's labels are partial — don't overwrite the published
         // table with them; the checkpoint carries the state for resume
@@ -275,23 +255,14 @@ object Cli {
         else s"components: converged in ${result.rounds} rounds")
 
       case "labelprop" =>
-        // stop watermark at command entry (see `components`)
-        val lpStop = Some(s"$dir/STOP"); val lpInvokedAt = System.currentTimeMillis()
-        val lpSeqSeen = graft.graph.GraphOps.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L)
+        val stop = StopMarker.atEntry(spark, s"$dir/STOP")
         val iters = rest.headOption.map(_.toInt).getOrElse(10)
-        val (et, sc, dc) = graphTable(spark, dir)
-        val g = spark.read.parquet(s"$dir/$et")
-        val fp = g.select(xxhash64(col(sc), col(dc)).as("h"))
-          .agg(expr("coalesce(bit_xor(h), 0L)")).first().getLong(0)
-        val ckptDir = f"$dir/checkpoints/lp-$fp%016x-i$iters"
-        val (e, dict) = graft.graph.GraphOps.indexEdges(spark, g, sc, dc)
-        val result = graft.graph.GraphOps.latestCheckpoint(spark, ckptDir, "lp") match {
+        val (e, dict, ckptDir) = kernelInput("lp", s"-i$iters")
+        val result = GraphOps.latestCheckpoint(spark, ckptDir, "lp") match {
           case Some(step) if step < iters =>
-            graft.graph.GraphOps.resumeLabelPropagation(spark, e, iters, ckptDir,
-              stopFlag = lpStop, stopAfterMs = lpInvokedAt, stopSeqSeen = lpSeqSeen)
-          case _ => graft.graph.GraphOps.labelPropagationResult(spark, e, iters,
-            checkpointDir = Some(ckptDir), stopFlag = lpStop, stopAfterMs = lpInvokedAt,
-            stopSeqSeen = lpSeqSeen)
+            GraphOps.resumeLabelPropagation(spark, e, iters, ckptDir, stop = Some(stop))
+          case _ => GraphOps.labelPropagationResult(spark, e, iters,
+            checkpointDir = Some(ckptDir), stop = Some(stop))
         }
         // a k-superstep LP label set is valid in its own right — publish it
         // even when stopped early (unlike CC's partial contraction)
@@ -306,14 +277,8 @@ object Cli {
         // Cooperative cancel (reference Task.java:207-217): a running
         // `pagerank`/`components`/`labelprop` on any node sharing this store
         // FS ends at its next checkpoint boundary, fully resumable. The
-        // payload carries this node's epoch-ms AND a monotonic sequence
-        // number (previous marker's seq + 1): runners compare the seq they
-        // saw at launch, so honoring a stop needs NO clock agreement at all;
-        // the epoch-ms keeps the timestamp fallback working for runners that
-        // didn't capture a seq (GraphOps.fsModifiedSince documents both
-        // channels).
-        val nextSeq = graft.graph.GraphOps.stopMarkerSeq(spark, s"$dir/STOP").getOrElse(0L) + 1L
-        Fs.write(spark, s"$dir/STOP", s"${System.currentTimeMillis()} seq=$nextSeq")
+        // marker's payload and staleness rules are StopMarker's.
+        StopMarker.request(spark, s"$dir/STOP")
         println("stop: requested (takes effect at the next checkpoint boundary)")
 
       case "status" =>

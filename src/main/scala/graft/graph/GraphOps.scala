@@ -1,5 +1,6 @@
 package graft.graph
 
+import graft.util.Fs
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -100,33 +101,19 @@ object GraphOps {
    *                  boundaries only); <=0 = fixed iteration count.
    * @param checkpointDir directory for resumable state; on restart, pass the
    *                  same dir to [[resumePageRank]].
-   * @param stopFlag  path of a cooperative STOP marker: the run ends at the
-   *                  next checkpoint boundary if the file exists and was
-   *                  modified at/after `stopAfterMs`.
-   * @param stopAfterMs markers modified before this epoch-ms watermark are
-   *                  stale and ignored (0 = honor any marker). Callers that
-   *                  pass their own invocation time get race-free semantics:
-   *                  a stop issued any time after launch is honored, and
-   *                  concurrent runs can't swallow each other's stop
-   *                  requests by deleting the marker.
+   * @param stop      cooperative STOP marker: the run ends at the next
+   *                  checkpoint boundary once it is requested.
    */
   def pageRank(spark: SparkSession, edges: DataFrame, iterations: Int,
                damping: Double = 0.85, redistributeDangling: Boolean = true,
                tol: Double = 0.0, checkpointEvery: Int = 5,
                checkpointDir: Option[String] = None,
                startRanks: Option[DataFrame] = None, startSuperstep: Int = 0,
-               stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
-               stopSeqSeen: Long = -1L,
+               stop: Option[StopMarker] = None,
                restart: Option[DataFrame] = None,
-               weightCol: Option[String] = None): PageRankResult = {
+               weightCol: Option[String] = None): PageRankResult =
+    KernelScope(spark, "pagerank", checkpointDir, stop) { k =>
     import spark.implicits._
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // AQE re-plans every superstep and its partition coalescing breaks the
-    // co-partitioning reuse between ranks/outDeg/edges (measured 3x slower
-    // with AQE on). Iterative kernels run with it off, restored afterwards.
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
 
     // Sentinel id for the dangling supernode (below any dense vertex id).
     val Sent = Long.MinValue
@@ -134,27 +121,18 @@ object GraphOps {
     // cache the raw projection so the partition-sizing count and the
     // repartition read the SOURCE once, not twice; released as soon as the
     // partitioned edge table is materialized
-    val eRaw = (weightCol match {
+    val eRaw = k.persist(weightCol match {
       // weighted arm: transition probability becomes wt/sum(wt) per src —
       // duplicate (src, dst) rows are MULTI-EDGES and sum their weight
       case Some(wc) => edges.select($"src".cast("long"), $"dst".cast("long"),
         col(wc).cast("double").as("wt"))
       case None => edges.select($"src".cast("long"), $"dst".cast("long"))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    })
     val edgeCount = eRaw.count()
-    val shufflePartitions = kernelPartitions(confPartitions, edgeCount)
-    // kernel-internal shuffle width: every aggregation exchange in the loop
-    // must match the static edge/state layout's width, or EnsureRequirements
-    // inserts an extra per-superstep exchange to reconcile the two
-    // (measured on the 48k-edge mined graph: agg at 32 vs layout at 8);
-    // restored in the finally
-    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
-    val e = eRaw
-      .repartition(shufflePartitions, $"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val shufflePartitions = k.width(edgeCount)
+    val e = k.persist(eRaw.repartition(shufflePartitions, $"src"))
 
-    val vertices = e.select($"src".as("id")).union(e.select($"dst".as("id")))
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val vertices = k.persist(e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct())
     // count + reserved-id guard in ONE job — which also materializes the
     // partitioned edge cache (vertices derive from e), so e needs no count
     // action of its own. Long.MinValue is the dangling supernode's sentinel
@@ -181,9 +159,8 @@ object GraphOps {
     require(restart.isEmpty || !redistributeDangling,
       "personalized restart requires redistributeDangling=false")
     val restartSeeds = restart.map { s =>
-      val sv = s.select(col("id").cast("long").as("id")).distinct()
-        .join(vertices, Seq("id"), "left_semi")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val sv = k.persist(s.select(col("id").cast("long").as("id")).distinct()
+        .join(vertices, Seq("id"), "left_semi"))
       val ns = sv.count()
       require(ns > 0, "pageRank restart: no seed id is present in the graph")
       (sv, sv.withColumn("p", lit(1.0 / ns)))
@@ -192,10 +169,10 @@ object GraphOps {
 
     // Static weighted transition edges E' (see Scaladoc): built once,
     // hash-partitioned by src once, reused by every superstep's join.
-    val outDeg = (weightCol match {
+    val outDeg = k.persist(weightCol match {
       case Some(_) => e.groupBy($"src").agg(count(lit(1)).as("outDeg"), sum($"wt").as("wsum"))
       case None    => e.groupBy($"src").agg(count(lit(1)).as("outDeg"))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    })
     if (weightCol.isDefined) {
       // zero/negative/NULL weights would silently corrupt the distribution
       // (wsum<=0 divides to Inf/negative mass; NULL rows drop their edge's
@@ -250,10 +227,9 @@ object GraphOps {
       .select($"src", least(lit(shufflePartitions.toLong),
         ($"outDeg" / hubThreshold) + 1L).cast("int").as("nsalt"))
     val sentSalt = math.min(shufflePartitions.toLong, n / hubThreshold + 1L).toInt
-    val hubs = (if (redistributeDangling && sentSalt > 1)
+    val hubs = k.persist(if (redistributeDangling && sentSalt > 1)
         realHubs.unionByName(Seq((Sent, sentSalt)).toDF("src", "nsalt"))
       else realHubs)
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val haveHubs = nRealHubs > 0 || (redistributeDangling && sentSalt > 1)
 
     // CSR-style adjacency: partitions hash-bucketed by (src[, salt]) and
@@ -266,7 +242,7 @@ object GraphOps {
     // (Queries.indexedPpEdges), so per-superstep analysis stays O(k).
     // Hub-free graphs skip the salt machinery entirely (no generator in the
     // hot path).
-    val eWS = (if (!haveHubs) eW.withColumn("salt", lit(0))
+    val eWS = k.persist(if (!haveHubs) eW.withColumn("salt", lit(0))
       .repartition(shufflePartitions, $"src")
       .sortWithinPartitions($"src")
     else eW.join(broadcast(hubs), Seq("src"), "left")
@@ -274,7 +250,6 @@ object GraphOps {
         pmod(hash($"dst"), coalesce($"nsalt", lit(1))).as("salt"))
       .repartition(shufflePartitions, $"src", $"salt")
       .sortWithinPartitions($"src", $"salt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     eWS.count()
 
     // Every id that owns a state row each superstep (sentinel included).
@@ -294,12 +269,11 @@ object GraphOps {
         .select($"id", coalesce($"p", lit(0.0)).as("p"))
       case None => allIdsBase
     })
-    val allIds = (if (!haveHubs) allIdsP
+    val allIds = k.persist((if (!haveHubs) allIdsP
       else allIdsP.join(broadcast(hubs.withColumnRenamed("src", "id")), Seq("id"), "left")
         .withColumn("nsalt", coalesce($"nsalt", lit(1))))
       .repartition(shufflePartitions, $"id")
-      .sortWithinPartitions($"id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .sortWithinPartitions($"id"))
     // no count action: the state-init localCheckpoint below scans every
     // allIds partition and materializes this cache in the same job
 
@@ -337,7 +311,7 @@ object GraphOps {
 
     // Block width stays at checkpointEvery even when no tol/checkpoint/stop
     // is requested: running q14's 8 (or q36's 10) supersteps as ONE deep job
-    // was MEASURED ~10% slower than 5-step blocks (R6Probe, 3 runs each) —
+    // was MEASURED ~10% slower than 5-step blocks (r6 measurement, 3 runs each) —
     // the mid-chain materialization buys better stage scheduling than the
     // saved job costs.
     val effCkptEvery = checkpointEvery
@@ -399,13 +373,8 @@ object GraphOps {
           maxDelta = dx + (if (redistributeDangling) damping * dm else 0.0)
           if (maxDelta < tol) converged = true
         }
-        checkpointDir.foreach(dir => writeCheckpoint(spark, dir, "pagerank", step, newState))
         prevBoundary = newState
-        // cooperative cancel (reference `stop`, Task.java:207-217): a STOP
-        // marker on the store FS ends the run at this (checkpointed,
-        // resumable) boundary — works from any node that shares the FS;
-        // markers older than the caller's watermark are stale and ignored
-        if (stopFlag.exists(f => fsModifiedSince(spark, f, stopAfterMs, stopSeqSeen))) converged = true
+        if (k.boundary(step, newState)) converged = true
       }
       state = newState
       metrics += SuperstepMetric("pagerank", step, (System.nanoTime() - t0) / 1000000L,
@@ -420,38 +389,20 @@ object GraphOps {
         val m = state.filter($"id" === Sent).select($"x").as[Double].head()
         state.filter($"id" =!= Sent).select($"id", ($"x" + lit(damping * m)).as("rank"))
       }
-    e.unpersist(false); eWS.unpersist(false); hubs.unpersist(false)
-    outDeg.unpersist(false); vertices.unpersist(false); allIds.unpersist(false)
-    // unpersist the frame that was actually persisted (the derived
-    // withColumn plan would not match any cache entry)
-    restartSeeds.foreach(_._1.unpersist(false))
     PageRankResult(ranks, metrics.toSeq, step)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
   }
 
   /** Resume PageRank mid-convergence from the latest checkpoint in `dir`. */
   def resumePageRank(spark: SparkSession, edges: DataFrame, iterations: Int, dir: String,
                      damping: Double = 0.85, redistributeDangling: Boolean = true,
                      tol: Double = 0.0, checkpointEvery: Int = 5,
-                     stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
-               stopSeqSeen: Long = -1L,
-               restart: Option[DataFrame] = None,
-               weightCol: Option[String] = None): PageRankResult = {
+                     stop: Option[StopMarker] = None,
+                     restart: Option[DataFrame] = None,
+                     weightCol: Option[String] = None): PageRankResult = {
     val (step, ranks) = readLatestCheckpoint(spark, dir, "pagerank")
     pageRank(spark, edges, iterations, damping, redistributeDangling, tol, checkpointEvery,
-      Some(dir), startRanks = Some(ranks), startSuperstep = step, stopFlag = stopFlag,
-      stopAfterMs = stopAfterMs, stopSeqSeen = stopSeqSeen, restart = restart,
-      weightCol = weightCol)
-  }
-
-  /** Small-file IO through the Hadoop FileSystem so checkpoints work on any
-    * FS the parquet snapshots land on (HDFS/S3A/local), not just the
-    * driver-local filesystem. */
-  private def fsWrite(spark: SparkSession, path: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
+      Some(dir), startRanks = Some(ranks), startSuperstep = step, stop = stop,
+      restart = restart, weightCol = weightCol)
   }
 
   /** Kernel partition count: the configured shuffle partitions, scaled DOWN
@@ -459,7 +410,7 @@ object GraphOps {
     * partitions by work volume (100 MB–1 GB each), not core count; the old
     * 10k-edge budget (~160 KB/partition) made every kernel stage overhead-
     * bound on sub-10M-edge graphs — re-measured in r6 with a budget sweep
-    * (R6Probe, warm runs at sf0.1): CC 10.6 s → 6.8 s and PageRank
+    * (r6 measurement, warm runs at sf0.1): CC 10.6 s → 6.8 s and PageRank
     * 6.7 s → 5.6 s going 10k → 150k, with the round-1 CC contraction job
     * alone dropping 3.3 s → 1.5 s. 150k edges ≈ 2.4 MB is still well below
     * the guide's floor, so this moves TOWARD principled sizing, not past
@@ -471,87 +422,9 @@ object GraphOps {
     // at 4); below it, floor at 8 so tiny graphs keep some parallelism
     math.min(conf.toLong, math.max(8L, edgeCount / sys.env.getOrElse("GRAFT_EDGES_PER_PARTITION", "150000").toLong + 1L)).toInt
 
-  /** Monotonic sequence number recorded in a STOP marker payload
-    * (`"<epochMs> seq=<n>"`), if present. Kernel launchers capture it at
-    * command entry; a later marker is then honored iff its seq is HIGHER —
-    * a pure counter comparison with no wall-clock in it, which closes the
-    * residual both-clocks-behind case of the timestamp watermark. */
-  def stopMarkerSeq(spark: SparkSession, path: String): Option[Long] =
-    fsRead(spark, path).flatMap(parseMarkerSeq)
-
-  private def parseMarkerSeq(payload: String): Option[Long] =
-    payload.trim.split("\\s+").collectFirst { case t if t.startsWith("seq=") => t.drop(4) }
-      .flatMap(t => scala.util.Try(t.toLong).toOption)
-
-  /** True iff `path` exists and records a STOP request newer than the
-    * launch watermark. Two freshness channels, most-robust first:
-    *
-    *  1. SEQUENCE: if the payload carries `seq=<n>` AND the launcher
-    *     captured the seq it saw at entry (`seqSeen >= 0`), the stop is
-    *     honored iff `n > seqSeen` — a monotonic counter comparison with no
-    *     clock dependency at all (closes the both-clocks-behind residual of
-    *     the timestamp scheme).
-    *  2. TIMESTAMP (fallback for seq-less markers or legacy callers):
-    *     freshness is the MAX of the payload timestamp (epoch-ms or ISO
-    *     instant, written by the stopping node) and the FS mtime — the max
-    *     means a stop survives EITHER a coarse/fileserver-stamped mtime
-    *     (payload rescues it) or a lagging stopping-node clock (mtime
-    *     rescues it).
-    *
-    * Any races with a concurrent marker delete (exists/read/stat TOCTOU)
-    * read as "no stop" — a vanished marker means the request was withdrawn,
-    * never a crash. */
-  private def fsModifiedSince(spark: SparkSession, path: String, sinceMs: Long,
-                              seqSeen: Long = -1L): Boolean =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && {
-        val payload = fsRead(spark, path).map(_.trim)
-        payload.flatMap(parseMarkerSeq) match {
-          case Some(seq) if seqSeen >= 0L => seq > seqSeen
-          case _ =>
-            val payloadMs = payload.flatMap { s =>
-              val head = s.split("\\s+").headOption.getOrElse(s)
-              scala.util.Try(head.toLong).toOption
-                .orElse(scala.util.Try(java.time.Instant.parse(head).toEpochMilli).toOption)
-            }
-            math.max(payloadMs.getOrElse(Long.MinValue),
-              fs.getFileStatus(p).getModificationTime) >= sinceMs
-        }
-      }
-    } catch { case _: java.io.IOException => false }
-
-  private def fsRead(spark: SparkSession, path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-    }
-  }
-
   /** Latest checkpointed superstep in `dir` for `kernel`, if any. */
   def latestCheckpoint(spark: SparkSession, dir: String, kernel: String = "pagerank"): Option[Int] =
-    fsRead(spark, s"$dir/$kernel/LATEST").map(_.trim.toInt)
-
-  def clearCheckpoints(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) { fs.delete(p, true); () }
-  }
-
-  private def writeCheckpoint(spark: SparkSession, dir: String, kernel: String,
-                              step: Int, state: DataFrame): Unit = {
-    val path = s"$dir/$kernel/superstep=$step"
-    state.write.mode("overwrite").parquet(path)
-    val rows = state.count()
-    val manifest =
-      s"""{"kernel": "$kernel", "superstep": $step, "rows": $rows, "partitions": ${state.rdd.getNumPartitions}}"""
-    fsWrite(spark, s"$dir/$kernel/MANIFEST-$step.json", manifest)
-    fsWrite(spark, s"$dir/$kernel/LATEST", step.toString)
-  }
+    Fs.read(spark, s"$dir/$kernel/LATEST").map(_.trim.toInt)
 
   private def readLatestCheckpoint(spark: SparkSession, dir: String, kernel: String): (Int, DataFrame) = {
     val step = latestCheckpoint(spark, dir, kernel)
@@ -590,43 +463,34 @@ object GraphOps {
     * resumable with per-partition lineage + metrics). */
   def resumeConnectedComponents(spark: SparkSession, edges: DataFrame, dir: String,
                                 maxIter: Int = 50, checkpointEvery: Int = 5,
-                                stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
-               stopSeqSeen: Long = -1L): CcResult = {
+                                stop: Option[StopMarker] = None): CcResult = {
     val (round, state) = readLatestCheckpoint(spark, dir, "cc")
     connectedComponentsResult(spark, edges, maxIter, checkpointEvery, Some(dir),
-      startState = Some(state), startRound = round,
-      stopFlag = stopFlag, stopAfterMs = stopAfterMs, stopSeqSeen = stopSeqSeen)
+      startState = Some(state), startRound = round, stop = stop)
   }
 
-  /** @param stopFlag cooperative STOP marker (same watermark semantics as
-    *                 [[pageRank]]): the run ends at the next checkpoint
-    *                 boundary, resumable via [[resumeConnectedComponents]];
-    *                 a stopped run's result carries `stopped = true` and
-    *                 PARTIAL component labels. */
+  /** @param stop cooperative STOP marker: the run ends at the next
+    *             checkpoint boundary, resumable via
+    *             [[resumeConnectedComponents]]; a stopped run's result
+    *             carries `stopped = true` and PARTIAL component labels. */
   def connectedComponentsResult(spark: SparkSession, edges: DataFrame, maxIter: Int = 50,
                                 checkpointEvery: Int = 5, checkpointDir: Option[String] = None,
                                 startState: Option[DataFrame] = None,
                                 startRound: Int = 0,
-                                stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
-               stopSeqSeen: Long = -1L): CcResult = {
-    import spark.implicits._
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val smjWas = spark.conf.get("spark.sql.join.preferSortMergeJoin", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+                                stop: Option[StopMarker] = None): CcResult =
     // Shuffled-hash over sort-merge for the star-round joins (guide §3.1):
     // the build sides (minsDeg / withMin) hold ONE row per src key, so a
     // per-partition hash table always fits, and the streamed sym/dir side
-    // skips its per-round O(E log E) sort entirely. Restored in the finally.
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    try {
+    // skips its per-round O(E log E) sort entirely.
+    KernelScope(spark, "cc", checkpointDir, stop, shuffledHash = true) { k =>
+    import spark.implicits._
     // cache the raw projection: the partition-sizing count, the vertex set
     // and the initial contracted edge set all read the source ONCE; released
     // below once both derived tables are materialized
-    val input = edges.select($"src".cast("long"), $"dst".cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val shuffleP = kernelPartitions(confPartitions, input.count())
+    val input = k.persist(edges.select($"src".cast("long"), $"dst".cast("long")))
+    val shuffleP = k.partitions(input.count())
     val shufflePartitions = shuffleP
+    // not scope-owned: the returned lazy `components` reads it
     val vertices = input.select($"src".as("id")).union(input.select($"dst".as("id")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     vertices.count()
@@ -699,7 +563,7 @@ object GraphOps {
     var dPrev = if (done) null else digest(e)
     // Each round materializes eagerly (localCheckpoint) before the next
     // starts. Lazily chaining CC rounds the way pageRank chains supersteps
-    // was MEASURED 3x slower at sf0.1 (48s -> 147s, CcTune): pageRank's
+    // was MEASURED 3x slower at sf0.1 (48s -> 147s, CC tuning measurement): pageRank's
     // per-superstep plan is LINEAR (state enters exactly once), but a star
     // round references its input several times (sym feeds both the join and
     // the min-agg; dir feeds both sides of smallStar), so an unmaterialized
@@ -714,20 +578,19 @@ object GraphOps {
       // EMERGENT in CC: a giant component's root accumulates a neighborhood
       // proportional to |C| as contraction proceeds). A separate degree job
       // here was a full extra O(2E) shuffle per round — measured ~15% of
-      // round wall time at sf0.1 (CcTune).
+      // round wall time at sf0.1 (CC tuning measurement).
       val nEdges = dPrev.getLong(0)
       // CONTRACTION-AWARE partitioning (r4 ask #3): star contraction shrinks
       // the edge set geometrically (sf0.1: 590k -> 208k -> 50k in two
       // rounds), but a fixed 32-way layout keeps paying full per-stage
       // scheduling + shuffle-file overhead on the tiny tail rounds —
-      // measured ~40% of q15 wall time (CcTune: 15.9s at 32 partitions vs
+      // measured ~40% of q15 wall time (CC tuning measurement: 15.9s at 32 partitions vs
       // 9.9s at 8 for identical rounds). Each round re-sizes the shuffle
       // width from the edge count the convergence digest already computed
       // (zero extra jobs); kernelPartitions never EXCEEDS the configured
       // value, so at 100 TB the conf cap always wins and the plan is
       // unchanged — only the contracted tail narrows.
-      val roundP = kernelPartitions(confPartitions, nEdges)
-      spark.conf.set("spark.sql.shuffle.partitions", roundP)
+      val roundP = k.width(nEdges)
       val hubThreshold = math.max(1000L, 2L * nEdges / roundP / 4)
       // ONE explicit exchange of the symmetrized table serves BOTH consumers
       // (guide §2.4): the min/degree aggregation and the large-star join each
@@ -738,9 +601,8 @@ object GraphOps {
       val sym = e.filter($"src" =!= $"dst")
         .union(e.filter($"src" =!= $"dst").select($"dst".as("src"), $"src".as("dst")))
         .repartition(roundP, $"src")
-      val minsDeg = sym.groupBy($"src")
-        .agg(least(min($"dst"), first($"src")).as("m"), count(lit(1)).as("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val minsDeg = k.persist(sym.groupBy($"src")
+        .agg(least(min($"dst"), first($"src")).as("m"), count(lit(1)).as("deg")))
       val hubTable = minsDeg.filter($"deg" > hubThreshold)
         .select($"src", least(lit(shuffleP.toLong), ($"deg" / hubThreshold) + 1L)
           .cast("int").as("nsalt"))
@@ -751,7 +613,7 @@ object GraphOps {
       // salting is semantically NEUTRAL (any nsalt assignment yields the
       // same join rows), so only balance can lag, never results — and it
       // removes the per-round eager minsDeg-materialization job that was
-      // ~0.5 s/round of pure probe cost at sf0.1 (R6Probe).
+      // ~0.5 s/round of pure probe cost at sf0.1 (r6 measurement).
       val hubs =
         if (hubsForRound == null) { if (hubTable.isEmpty) None else Some(hubTable) }
         else hubsForRound
@@ -781,12 +643,7 @@ object GraphOps {
       dPrev = dNext
       e = next
       iter += 1
-      if (iter % checkpointEvery == 0 && !done) {
-        checkpointDir.foreach(dir => writeCheckpoint(spark, dir, "cc", iter, e))
-        // cooperative cancel at the (checkpointed, resumable) boundary —
-        // same watermark-raced marker semantics as pageRank
-        if (stopFlag.exists(f => fsModifiedSince(spark, f, stopAfterMs, stopSeqSeen))) stoppedEarly = true
-      }
+      if (iter % checkpointEvery == 0 && !done && k.boundary(iter, e)) stoppedEarly = true
       metrics += SuperstepMetric("cc", iter, (System.nanoTime() - t0) / 1000000L,
         dNext.getLong(0), edgePartitions, Double.NaN)
     }
@@ -798,12 +655,6 @@ object GraphOps {
       .join(e.select($"src".as("id"), $"dst".as("c")), Seq("id"), "left")
       .select($"id", coalesce($"c", $"id").as("component"))
     CcResult(components, metrics.toSeq, iter, stopped = stoppedEarly)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.join.preferSortMergeJoin", smjWas)
-      // per-round contraction-aware narrowing is kernel-internal state
-      spark.conf.set("spark.sql.shuffle.partitions", confPartitions)
-    }
   }
 
   // ------------------------------------------------------ label propagation
@@ -825,29 +676,22 @@ object GraphOps {
     * snapshot in `dir` (north_rule: resumable, per-partition lineage + metrics). */
   def resumeLabelPropagation(spark: SparkSession, edges: DataFrame, iterations: Int, dir: String,
                              checkpointEvery: Int = 5,
-                             stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
-               stopSeqSeen: Long = -1L): LpResult = {
+                             stop: Option[StopMarker] = None): LpResult = {
     val (step, labels) = readLatestCheckpoint(spark, dir, "lp")
     labelPropagationResult(spark, edges, iterations, checkpointEvery, Some(dir),
-      startLabels = Some(labels), startSuperstep = step,
-      stopFlag = stopFlag, stopAfterMs = stopAfterMs, stopSeqSeen = stopSeqSeen)
+      startLabels = Some(labels), startSuperstep = step, stop = stop)
   }
 
-  /** @param stopFlag cooperative STOP marker (same watermark semantics as
-    *                 [[pageRank]]): the run ends at the next checkpoint
-    *                 boundary with `supersteps < iterations`, resumable via
-    *                 [[resumeLabelPropagation]]. */
+  /** @param stop cooperative STOP marker: the run ends at the next
+    *             checkpoint boundary with `supersteps < iterations`,
+    *             resumable via [[resumeLabelPropagation]]. */
   def labelPropagationResult(spark: SparkSession, edges: DataFrame, iterations: Int,
                              checkpointEvery: Int = 5, checkpointDir: Option[String] = None,
                              startLabels: Option[DataFrame] = None,
                              startSuperstep: Int = 0,
-                             stopFlag: Option[String] = None, stopAfterMs: Long = 0L,
-               stopSeqSeen: Long = -1L): LpResult = {
+                             stop: Option[StopMarker] = None): LpResult =
+    KernelScope(spark, "lp", checkpointDir, stop) { k =>
     import spark.implicits._
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
     // sizing count + reserved-id guard in ONE job over the raw (pre-distinct)
     // union: the winner aggregate below negates labels
     // (max(struct(cnt, -label))), and negating Long.MinValue overflows — so
@@ -863,11 +707,7 @@ object GraphOps {
     require(eStats.isNullAt(1) || !eStats.getBoolean(1),
       s"labelPropagation reserves vertex id ${Long.MinValue} (label negation " +
         "in the tie-break aggregate would overflow); the input graph contains it")
-    val shufflePartitions = kernelPartitions(confPartitions, edgeCount)
-    // kernel-internal shuffle width: aggregation exchanges inside the loop
-    // must match the edge layout's width, or EnsureRequirements inserts an
-    // extra per-superstep exchange to reconcile them (restored in finally)
-    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
+    val shufflePartitions = k.width(edgeCount)
 
     // ONE exchange builds the deduped, src-partitioned, src-sorted layout:
     // repartition by src first, then dedup — hashpartitioning(src) satisfies
@@ -875,32 +715,29 @@ object GraphOps {
     // a pair share the src key), so the distinct runs in place with no
     // second exchange (guide §2.4: two operations keyed the same way share
     // one exchange).
-    val sym0 = symRaw
+    val sym0 = k.persist(symRaw
       .repartition(shufflePartitions, $"src")
       .dropDuplicates("src", "dst")
-      .sortWithinPartitions($"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .sortWithinPartitions($"src"))
 
     // Hub salting, same scheme as pageRank: a symmetrized hub's adjacency
     // otherwise sits in ONE partition of every superstep's join. The degree
     // aggregation reads the already-partitioned sym0 layout (exchange
     // reuse: groupBy(src) over hashpartitioning(src) shuffles nothing).
     val hubThreshold = math.max(1000L, edgeCount / shufflePartitions / 4)
-    val lpHubs = sym0.groupBy($"src").agg(count(lit(1)).as("deg"))
+    val lpHubs = k.persist(sym0.groupBy($"src").agg(count(lit(1)).as("deg"))
       .filter($"deg" > hubThreshold)
       .select($"src", least(lit(shufflePartitions.toLong),
-        ($"deg" / hubThreshold) + 1L).cast("int").as("nsalt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        ($"deg" / hubThreshold) + 1L).cast("int").as("nsalt")))
     val haveHubs = lpHubs.count() > 0
 
     // hub-free graphs reuse the sym0 layout as-is (no second shuffle+cache);
     // hubby graphs re-layout once with the salt key
     val sym = (if (!haveHubs) sym0.withColumn("salt", lit(0))
-    else sym0.join(broadcast(lpHubs), Seq("src"), "left")
+    else k.persist(sym0.join(broadcast(lpHubs), Seq("src"), "left")
       .select($"src", $"dst", pmod(hash($"dst"), coalesce($"nsalt", lit(1))).as("salt"))
       .repartition(shufflePartitions, $"src", $"salt")
-      .sortWithinPartitions($"src", $"salt")
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .sortWithinPartitions($"src", $"salt")))
     val edgePartitions = sym.rdd.getNumPartitions
     if (haveHubs) { sym.count(); sym0.unpersist(false) }
 
@@ -948,20 +785,11 @@ object GraphOps {
       // at checkpoints — same fixed-cost reasoning as pageRank
       val atCheckpoint = iter % checkpointEvery == 0 || iter == iterations
       labels = if (atCheckpoint) winners.localCheckpoint(true) else winners
-      if (atCheckpoint && iter != iterations) {
-        checkpointDir.foreach(dir => writeCheckpoint(spark, dir, "lp", iter, labels))
-        // cooperative cancel at the (checkpointed, resumable) boundary
-        if (stopFlag.exists(f => fsModifiedSince(spark, f, stopAfterMs, stopSeqSeen))) stoppedEarly = true
-      }
+      if (atCheckpoint && iter != iterations && k.boundary(iter, labels)) stoppedEarly = true
       metrics += SuperstepMetric("lp", iter, (System.nanoTime() - t0) / 1000000L,
         edgeCount, edgePartitions, Double.NaN, boundary = atCheckpoint)
     }
-    sym.unpersist(false); sym0.unpersist(false); lpHubs.unpersist(false)
     LpResult(labels.select($"id", $"label"), metrics.toSeq, iter)
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", confPartitions)
-    }
   }
 
   // ------------------------------------------------------------- triangles
@@ -1083,11 +911,11 @@ object GraphOps {
                     maxHops: Int): DataFrame = {
     import spark.implicits._
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val e = edges.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .filter($"src" =!= $"dst").distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val p = kernelPartitions(confPartitions, e.count())
+    val p = kernelPartitions(sessionWidth, e.count())
     val eP = e.repartition(p, $"src").persist(StorageLevel.MEMORY_AND_DISK)
 
     var settled = seeds.select(col("id").cast("long").as("id")).distinct()
@@ -1196,26 +1024,18 @@ object GraphOps {
    */
   def hits(spark: SparkSession, edges: DataFrame, iterations: Int,
            checkpointEvery: Int = 4): DataFrame = {
-    import spark.implicits._
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val eRaw = edges.select($"src".cast("long"), $"dst".cast("long"))
-        .filter($"src" =!= $"dst").distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val p = kernelPartitions(confPartitions, eRaw.count())
-      // kernel-width aggregation exchanges (AQE is off here, so nothing else
-      // narrows them); restored in the finally
-      spark.conf.set("spark.sql.shuffle.partitions", p)
-      val eBySrc = eRaw.repartition(p, $"src").persist(StorageLevel.MEMORY_AND_DISK)
-      val eByDst = eRaw.repartition(p, $"dst").persist(StorageLevel.MEMORY_AND_DISK)
+    KernelScope(spark, "hits") { k =>
+      import spark.implicits._
+      val eRaw = k.persist(edges.select($"src".cast("long"), $"dst".cast("long"))
+        .filter($"src" =!= $"dst").distinct())
+      val p = k.width(eRaw.count())
+      val eBySrc = k.persist(eRaw.repartition(p, $"src"))
+      val eByDst = k.persist(eRaw.repartition(p, $"dst"))
       eBySrc.count(); eByDst.count()
       // derive verts from the materialized copy, then release the raw scan
-      val verts = eBySrc.select($"src".as("id")).union(eBySrc.select($"dst".as("id")))
-        .distinct().repartition(p, $"id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val verts = k.persist(eBySrc.select($"src".as("id")).union(eBySrc.select($"dst".as("id")))
+        .distinct().repartition(p, $"id"))
       require(verts.count() > 0, "hits: the edge table is empty")
       eRaw.unpersist(false)
 
@@ -1243,13 +1063,8 @@ object GraphOps {
       require(!normA.isInfinite && !normH.isInfinite,
         s"hits: magnitudes overflowed after $iterations iterations; normalize in blocks")
       require(normA > 0 && normH > 0, "hits: zero total authority/hub mass")
-      val out = a.join(h, Seq("id"))
+      a.join(h, Seq("id"))
         .select($"id", ($"h" / normH).as("hub"), ($"a" / normA).as("authority"))
-      eBySrc.unpersist(false); eByDst.unpersist(false); verts.unpersist(false)
-      out
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", confPartitions)
     }
   }
 
@@ -1277,11 +1092,11 @@ object GraphOps {
     import spark.implicits._
     require(walkLen >= 1 && walksPerVertex >= 1,
       "walkLen and walksPerVertex must be >= 1")
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val e = edges.select($"src".cast("long"), $"dst".cast("long"))
       .filter($"src" =!= $"dst").distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val p = kernelPartitions(confPartitions, e.count())
+    val p = kernelPartitions(sessionWidth, e.count())
     val w = Window.partitionBy($"src").orderBy($"dst")
     val adj = e.select($"src", $"dst", (row_number().over(w) - 1).cast("long").as("idx"))
       .repartition(p, $"src").persist(StorageLevel.MEMORY_AND_DISK)
@@ -1399,21 +1214,15 @@ object GraphOps {
 
   def sccResult(spark: SparkSession, edges: DataFrame,
                 maxOuter: Int = 100,
-                maxColorIters: Int = 500): (DataFrame, SccStats) = {
-    import spark.implicits._
-    var trimRounds = 0; var colorIters = 0; var backIters = 0
-    var trimmedVerts = 0L; var coloredVerts = 0L
-    val confPartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+                maxColorIters: Int = 500): (DataFrame, SccStats) =
+    KernelScope(spark, "scc") { k =>
+      import spark.implicits._
+      var trimRounds = 0; var colorIters = 0; var backIters = 0
+      var trimmedVerts = 0L; var coloredVerts = 0L
       var e = edges.select($"src".cast("long"), $"dst".cast("long"))
         .filter($"src" =!= $"dst").distinct()
         .localCheckpoint(true)
-      val p = kernelPartitions(confPartitions, e.count())
-      // kernel-width aggregation/join exchanges (AQE is off here); restored
-      // in the finally
-      spark.conf.set("spark.sql.shuffle.partitions", p)
+      val p = k.width(e.count())
       e = e.repartition(p, $"src").localCheckpoint(true)
       var verts = e.select($"src".as("id")).union(e.select($"dst".as("id")))
         .distinct().localCheckpoint(true)
@@ -1423,7 +1232,7 @@ object GraphOps {
       while (nv > 0 && outer < maxOuter) {
         // (1) trim TO FIXPOINT: no live out-edges OR no live in-edges ->
         // singleton SCC. On dependency-graph shapes the overwhelming
-        // majority of vertices leave here (SccProbe, sf0.01 face: 23,516
+        // majority of vertices leave here (r6 measurement, sf0.01 face: 23,516
         // of 23,808 through 10 trim rounds; coloring then touches 292),
         // so iterating the cheap trim before any coloring collapses the
         // expensive phase onto the small cyclic core — 33 s vs ~8 min
@@ -1528,21 +1337,16 @@ object GraphOps {
         outer += 1
       }
       require(nv == 0, s"scc: did not peel the graph in $maxOuter outer rounds")
-      if (assignedParts.isEmpty) {
-        // empty edge table (or self-loops only): no vertices, empty result
-        return (Seq.empty[(Long, Long)].toDF("id", "scc"),
-          SccStats(outer, trimRounds, colorIters, backIters, trimmedVerts, coloredVerts))
+      val stats = SccStats(outer, trimRounds, colorIters, backIters, trimmedVerts, coloredVerts)
+      // empty edge table (or self-loops only): no vertices, empty result
+      if (assignedParts.isEmpty) (Seq.empty[(Long, Long)].toDF("id", "scc"), stats)
+      else {
+        // canonicalize: min member id per component
+        val assigned = assignedParts.reduce(_.unionByName(_))
+        val relabel = assigned.groupBy($"scc").agg(min($"id").as("mid"))
+        (assigned.join(relabel, Seq("scc")).select($"id", $"mid".as("scc")), stats)
       }
-      // canonicalize: min member id per component
-      val assigned = assignedParts.reduce(_.unionByName(_))
-      val relabel = assigned.groupBy($"scc").agg(min($"id").as("mid"))
-      (assigned.join(relabel, Seq("scc")).select($"id", $"mid".as("scc")),
-        SccStats(outer, trimRounds, colorIters, backIters, trimmedVerts, coloredVerts))
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", confPartitions)
     }
-  }
 
   /**
    * Bipartite co-occurrence projection: from `(groupCol, itemCol)`

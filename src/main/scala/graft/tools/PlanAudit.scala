@@ -226,7 +226,7 @@ object PlanAudit {
         "sets — vertex-keyed, map-side-combinable distincts, nothing keyed " +
         "on anything component-sized. This round runs to FIXPOINT before " +
         "any coloring: on dependency-graph shapes it drains ~99% of " +
-        "vertices (SccProbe), so the expensive phases only ever see the " +
+        "vertices (r6 measurement), so the expensive phases only ever see the " +
         "small cyclic core.") {
       import spark.implicits._
       val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L)).toDF("src", "dst").localCheckpoint(true)
@@ -314,7 +314,7 @@ object PlanAudit {
   document text (ratio 0.275 at ~220-char docs; the digest key is constant
   width, so the gap widens linearly with document size — KB-scale docs
   shuffle ~30x less than raw-text grouping).
-- `CcTune` (sf0.1 derived graph, 590k edges): 4 rounds, 15-21s wall,
+- CC tuning measurement (sf0.1 derived graph, 590k edges): 4 rounds, 15-21s wall,
   3-5s/round including the per-round hub-refresh agg. Negative result,
   measured: lazily chaining 2 CC rounds per materialization (pageRank-style)
   was 3x SLOWER (147s) — a star round references its input several times, so

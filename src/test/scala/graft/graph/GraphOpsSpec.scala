@@ -121,11 +121,11 @@ class GraphOpsSpec extends AnyFunSuite {
     val flag = s"$dir/STOP"
     graft.util.Fs.write(spark, flag, "requested")
     val stopped = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4,
-      checkpointDir = Some(s"$dir/ck"), stopFlag = Some(flag))
+      checkpointDir = Some(s"$dir/ck"), stop = Some(StopMarker(flag)))
     assert(stopped.supersteps == 4) // ended at the first boundary, checkpointed
     graft.util.Fs.delete(spark, flag)
     val resumed = GraphOps.resumePageRank(spark, edgeDf, 12, s"$dir/ck",
-      checkpointEvery = 4, stopFlag = Some(flag))
+      checkpointEvery = 4, stop = Some(StopMarker(flag)))
     assert(resumed.supersteps == 12)
     val full = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4)
     val a = full.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -134,17 +134,17 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("stop flag halts CC and LP at checkpoint boundaries; resume completes exactly") {
-    // CC: pre-existing marker (stopAfterMs=0 honors any) stops after the
+    // CC: pre-existing marker (afterMs=0 honors any) stops after the
     // first checkpointed round; result is flagged PARTIAL, resume finishes
     val dir = java.nio.file.Files.createTempDirectory("graft-stop-cclp").toString
     val flag = s"$dir/STOP"
     graft.util.Fs.write(spark, flag, "requested")
     val ccStopped = GraphOps.connectedComponentsResult(spark, edgeDf, checkpointEvery = 1,
-      checkpointDir = Some(s"$dir/cc"), stopFlag = Some(flag))
+      checkpointDir = Some(s"$dir/cc"), stop = Some(StopMarker(flag)))
     assert(ccStopped.stopped && ccStopped.rounds == 1)
     graft.util.Fs.delete(spark, flag)
     val ccResumed = GraphOps.resumeConnectedComponents(spark, edgeDf, s"$dir/cc",
-      checkpointEvery = 1, stopFlag = Some(flag))
+      checkpointEvery = 1, stop = Some(StopMarker(flag)))
     assert(!ccResumed.stopped)
     val direct = GraphOps.connectedComponents(spark, edgeDf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -154,11 +154,11 @@ class GraphOpsSpec extends AnyFunSuite {
     // labels equal the uninterrupted run exactly
     graft.util.Fs.write(spark, flag, "requested")
     val lpStopped = GraphOps.labelPropagationResult(spark, edgeDf, 6, checkpointEvery = 2,
-      checkpointDir = Some(s"$dir/lp"), stopFlag = Some(flag))
+      checkpointDir = Some(s"$dir/lp"), stop = Some(StopMarker(flag)))
     assert(lpStopped.supersteps == 2)
     graft.util.Fs.delete(spark, flag)
     val lpResumed = GraphOps.resumeLabelPropagation(spark, edgeDf, 6, s"$dir/lp",
-      checkpointEvery = 2, stopFlag = Some(flag))
+      checkpointEvery = 2, stop = Some(StopMarker(flag)))
     assert(lpResumed.supersteps == 6)
     val lpDirect = GraphOps.labelPropagation(spark, edgeDf, 6)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -175,20 +175,20 @@ class GraphOpsSpec extends AnyFunSuite {
     // channel honors it purely by counter: seq=1 > seqSeen=0.
     graft.util.Fs.write(spark, flag, "12345 seq=1")
     val stopped = GraphOps.pageRank(spark, edgeDf, 12, checkpointEvery = 4,
-      checkpointDir = Some(s"$dir/ck1"), stopFlag = Some(flag),
-      stopAfterMs = System.currentTimeMillis() + 3600L * 1000, stopSeqSeen = 0L)
+      checkpointDir = Some(s"$dir/ck1"),
+      stop = Some(StopMarker(flag, afterMs = System.currentTimeMillis() + 3600L * 1000, seqSeen = 0L)))
     assert(stopped.supersteps == 4, "higher-seq marker must stop regardless of clocks")
     // A marker whose seq the launcher already SAW at entry must NOT stop the
-    // run, even though stopAfterMs=0 + a fresh mtime would under timestamps.
+    // run, even though afterMs=0 + a fresh mtime would under timestamps.
     val ignored = GraphOps.pageRank(spark, edgeDf, 8, checkpointEvery = 4,
-      checkpointDir = Some(s"$dir/ck2"), stopFlag = Some(flag),
-      stopAfterMs = 0L, stopSeqSeen = 1L)
+      checkpointDir = Some(s"$dir/ck2"),
+      stop = Some(StopMarker(flag, afterMs = 0L, seqSeen = 1L)))
     assert(ignored.supersteps == 8, "already-seen seq must be ignored")
     // seq-less legacy markers keep the timestamp semantics
     graft.util.Fs.write(spark, flag, "requested")
     val legacy = GraphOps.pageRank(spark, edgeDf, 8, checkpointEvery = 4,
-      checkpointDir = Some(s"$dir/ck3"), stopFlag = Some(flag),
-      stopAfterMs = 0L, stopSeqSeen = 5L)
+      checkpointDir = Some(s"$dir/ck3"),
+      stop = Some(StopMarker(flag, afterMs = 0L, seqSeen = 5L)))
     assert(legacy.supersteps == 4, "seq-less marker falls back to the timestamp channel")
   }
 
@@ -245,6 +245,57 @@ class GraphOpsSpec extends AnyFunSuite {
     val (t0, pv) = GraphOps.triangleCount(spark, empty)
     assert(t0 == 0 && pv.count() == 0)
     assert(GraphOps.degrees(empty).count() == 0)
+  }
+
+  private val kernelConfKeys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+    "spark.sql.join.preferSortMergeJoin")
+  private def kernelConf() = kernelConfKeys.map(k => k -> spark.conf.get(k)).toMap
+
+  /** Runs `body` with the session at 16 shuffle partitions and AQE on — a
+    * width no kernel picks for the fixture graph, so a leaked kernel width
+    * shows — then restores the harness conf. */
+  private def atSessionWidth16(body: => Unit): Unit = {
+    val saved = kernelConf()
+    spark.conf.set("spark.sql.shuffle.partitions", 16L)
+    spark.conf.set("spark.sql.adaptive.enabled", true)
+    try body finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("every scoped kernel leaves AQE, shuffle width and join preference as it found them") {
+    atSessionWidth16 {
+      val before = kernelConf()
+      assert(before("spark.sql.shuffle.partitions") == "16")
+      val kernels = Seq[(String, () => Any)](
+        "pageRank" -> (() => GraphOps.pageRank(spark, edgeDf, 3)),
+        "connectedComponentsResult" -> (() => GraphOps.connectedComponentsResult(spark, edgeDf)),
+        "labelPropagationResult" -> (() => GraphOps.labelPropagationResult(spark, edgeDf, 2)),
+        "hits" -> (() => GraphOps.hits(spark, edgeDf, 2)),
+        "sccResult" -> (() => GraphOps.sccResult(spark, edgeDf)))
+      for ((name, run) <- kernels) {
+        run()
+        assert(kernelConf() == before, s"$name changed the session conf")
+      }
+    }
+  }
+
+  test("a kernel that throws releases its caches and restores the session conf") {
+    // empty, and a plan no other test persists (a leaked cache of an equal
+    // plan elsewhere would absorb this run's persist calls)
+    val empty = edgeDf.filter($"src" < 0L)
+    atSessionWidth16 {
+      val before = kernelConf()
+      for ((name, run) <- Seq[(String, () => Any)](
+             "pageRank" -> (() => GraphOps.pageRank(spark, empty, 3)),
+             "hits" -> (() => GraphOps.hits(spark, empty, 3)))) {
+        val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains("empty"))
+        // only NEW entries are leaks: the context cleaner may drop older ones
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
+        assert(leaked.isEmpty, s"$name left ${leaked.size} cached RDDs behind")
+        assert(kernelConf() == before, s"$name changed the session conf")
+      }
+    }
   }
 
   test("degrees") {
